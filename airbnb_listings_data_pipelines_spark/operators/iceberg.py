@@ -1332,7 +1332,7 @@ def export_iceberg_metadata(table, format_version: int | None = None) -> int:
         # txlog fold at that version — one O(commits-since-checkpoint)
         # replay, no manifest decode), every prior data manifest
         # carries unread and the refresh does ZERO O(live files) work.
-        from .txlog import replay_log
+        from .logfold import replay_log
 
         live_set = set(files)
         try:
@@ -2539,6 +2539,7 @@ def convert_from_iceberg(spark, path: str):
     txlog is authoritative: ``to_iceberg`` refuses (foreign snapshot
     ids are not txlog versions), while ``to_delta_log`` works — there
     is no pre-existing ``_delta_log`` to collide with."""
+    from .logfold import partition_values
     from .txlog import TxLogTable, footer_stats_dict
 
     t = TxLogTable(spark, path)
@@ -2732,7 +2733,7 @@ def convert_from_iceberg(spark, path: str):
             # cross-check the manifest's partition record against the
             # hive path the txlog reader will trust from now on
             if pby:
-                hive = TxLogTable._partition_values(rel)
+                hive = partition_values(rel)
                 miss = [c for c in pby if c not in hive]
                 if miss:
                     raise ValueError(

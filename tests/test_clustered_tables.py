@@ -123,17 +123,17 @@ def test_checkpoint_cleanup_no_resurrection(spark, tmp_path, monkeypatch):
 
 def test_export_domain_and_protocol(spark, tmp_path):
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
-        _replay_delta_log,
         export_delta_log,
         write_delta_checkpoint,
     )
+    from airbnb_listings_data_pipelines_spark.operators.logfold import replay_delta_log
 
     t = _mk(spark, tmp_path, n=100)
     t.cluster_by(["a", "b"])
     t.optimize(target_files=2)
     export_delta_log(spark, t)
     dd = os.path.join(t.path, "_delta_log")
-    st = _replay_delta_log(spark, dd)
+    st = replay_delta_log(dd)
     assert json.loads(
         st.domains["delta.clustering"]["configuration"]
     )["clusteringColumns"] == [["a"], ["b"]]
@@ -148,7 +148,7 @@ def test_export_domain_and_protocol(spark, tmp_path):
     for f in sorted(os.listdir(dd)):
         if re.fullmatch(r"\d{20}\.json", f) and int(f.split(".")[0]) < v:
             os.remove(os.path.join(dd, f))
-    st2 = _replay_delta_log(spark, dd)
+    st2 = replay_delta_log(dd)
     assert "delta.clustering" in st2.domains
 
 
@@ -174,16 +174,16 @@ def test_export_domain_physical_names_under_mapping(spark, tmp_path):
     PHYSICAL names in clusteringColumns — external engines resolve the
     domain against the files, not the logical schema."""
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
-        _replay_delta_log,
         export_delta_log,
     )
+    from airbnb_listings_data_pipelines_spark.operators.logfold import replay_delta_log
 
     t = _mk(spark, tmp_path, n=50)
     t.rename_column("amt", "amount")  # flips the table to mapped mode
     t.cluster_by(["a", "amount"])
     t.optimize(target_files=1)
     export_delta_log(spark, t)
-    st = _replay_delta_log(spark, os.path.join(t.path, "_delta_log"))
+    st = replay_delta_log(os.path.join(t.path, "_delta_log"))
     cols = json.loads(
         st.domains["delta.clustering"]["configuration"]
     )["clusteringColumns"]

@@ -347,10 +347,10 @@ def test_foreign_skip_change_commits_append_tail(registered, spark, tmp_path):
     assert ks == sorted(list(range(40)) + [100])
 
 
-def test_fold_twins_match_deltalog_reader(registered, spark, tmp_path):
-    """The inlined _dlog fold twins must agree with the independent
-    operators/deltalog replay on the same foreign log (the same
-    twin-equivalence pin the txlog fold twins have)."""
+def test_source_snapshot_matches_deltalog_reader(registered, spark, tmp_path):
+    """The DataSource snapshot must agree with
+    operators/deltalog.read_delta_snapshot on the same foreign log —
+    two public readers over the one logfold Delta fold."""
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
         read_delta_snapshot,
     )
@@ -578,12 +578,11 @@ def test_foreign_cdf_range_below_cleaned_checkpoint_refused(
     assert byv[4] == {103}
 
 
-def test_cdf_twins_datasource_vs_operator(registered, spark, tmp_path):
-    """Twin-equivalence pin for the two foreign-Delta CDF readers: the
-    DataSource batch CDF (txlog_source._dlog_* twins, raw file
-    granularity) and deltalog.read_delta_changes(net=False) must emit
-    the IDENTICAL multiset over the same foreign log — the same
-    equivalence contract the txlog fold twins carry."""
+def test_cdf_datasource_matches_operator(registered, spark, tmp_path):
+    """The two foreign-Delta CDF readers — the DataSource batch CDF (raw
+    file granularity, planned from logfold.delta_commit_deltas) and
+    deltalog.read_delta_changes(net=False) — must emit the IDENTICAL
+    multiset over the same foreign log."""
     from collections import Counter
 
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
@@ -607,3 +606,53 @@ def test_cdf_twins_datasource_vs_operator(registered, spark, tmp_path):
         )
     )
     assert a == b
+
+
+@pytest.mark.parametrize(
+    "protocol,match",
+    [
+        # reader version 3 without a readerFeatures list: nothing says
+        # which features the table needs, so it cannot be read safely
+        ({"minReaderVersion": 3, "minWriterVersion": 7}, "minReaderVersion"),
+        (
+            {
+                "minReaderVersion": 3,
+                "minWriterVersion": 7,
+                "readerFeatures": ["variantType"],
+                "writerFeatures": ["variantType"],
+            },
+            "variantType",
+        ),
+    ],
+    ids=["v3_no_features", "variant_type"],
+)
+def test_source_refuses_unsupported_protocol(
+    registered, spark, tmp_path, protocol, match
+):
+    """Batch and streaming reads refuse a foreign log whose protocol the
+    reader cannot honor — the rule read_delta_snapshot applies, from the
+    one logfold.check_protocol."""
+    TxLogTable.create(
+        spark,
+        str(tmp_path / "native"),
+        spark.createDataFrame([(1, "a")], "k int, v string"),
+    ).to_delta_log()
+    foreign = _foreignize(str(tmp_path / "native"), str(tmp_path / "foreign"))
+    c0 = os.path.join(foreign, "_delta_log", f"{0:020d}.json")
+    with open(c0) as fh:
+        actions = [json.loads(line) for line in fh if line.strip()]
+    actions = [{"protocol": protocol} if "protocol" in a else a for a in actions]
+    with open(c0, "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    with pytest.raises(Exception, match=match):
+        spark.read.format("txlog").load(foreign).collect()
+    with pytest.raises(Exception, match=match):
+        q = (
+            spark.readStream.format("txlog")
+            .load(foreign)
+            .writeStream.format("memory")
+            .queryName("refused_protocol")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)

@@ -275,7 +275,7 @@ def test_parquet_sidecar_checkpoints_roundtrip(spark, driven, tmp_path):
     assert {r._change_type for r in feed.collect()} == {"insert"}
     hist = {h["version"]: h for h in t2.history()}
     assert hist[_CHECKPOINT_EVERY]["n_adds"] > 0  # from n_adds, not adds
-    # the DataSource's inlined twin reads the sidecar too
+    # the DataSource reads the sidecar too
     txlog_source.register(spark)
     ds = spark.read.format("txlog").load(t.path)
     assert sorted(map(tuple, ds.collect())) == sorted(

@@ -2,11 +2,7 @@
 snapshot + time travel, typed partition reattachment, schema-evolution
 null-fill, and the streaming source's append-only tail with
 exactly-once recovery — all through ``spark.read.format("txlog")`` /
-``readStream``, the way an external Spark job would consume the table.
-Also pins the module's INLINED pure log-fold helpers equivalent to the
-canonical ones in operators/txlog.py (the module is deliberately
-self-contained so cloudpickle can ship it by value to Spark's worker
-and streaming-runner processes — see its docstring)."""
+``readStream``, the way an external Spark job would consume the table."""
 
 from __future__ import annotations
 
@@ -15,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from airbnb_listings_data_pipelines_spark.operators import txlog as txmod
+from airbnb_listings_data_pipelines_spark.operators import logfold
 from airbnb_listings_data_pipelines_spark.operators.txlog import TxLogTable
 from airbnb_listings_data_pipelines_spark.sources import txlog_source
 
@@ -129,28 +125,6 @@ def test_stream_change_commits_raise_or_skip(registered, tmp_path):
     assert sorted(r.k for r in spark.read.parquet(out).collect()) == [1, 2, 5]
 
 
-def test_inlined_helpers_match_canonical(registered, tmp_path, monkeypatch):
-    """The source module's self-contained log-fold twins must agree with
-    operators/txlog.py's canonical functions — across a checkpoint
-    commit (whose recorded adds are the full live list)."""
-    spark = registered
-    monkeypatch.setattr(txmod, "_CHECKPOINT_EVERY", 3)
-    t = _mk(spark, str(tmp_path / "h"))
-    for i in range(3, 8):
-        t.append(spark.createDataFrame([(i, float(i))], "k int, price double"))
-    t.delete_where("k = 4")
-    log = t.log_dir
-    assert txlog_source._replay(log) == txmod.replay_log(log)
-    for v in range(t.version() + 1):
-        assert txlog_source._replay(log, v) == txmod.replay_log(log, v)
-        assert txlog_source._schema_json_at(log, v) == txmod.schema_json_at(
-            log, v
-        )
-    assert txlog_source._deltas(log, 0, t.version()) == txmod.commit_file_deltas(
-        log, 0, t.version()
-    )
-
-
 def test_batch_cdf_reads_per_commit_changes(registered, tmp_path):
     """readChangeFeed=true (Delta's option): per-commit change rows with
     _change_type/_commit_version. Raw file granularity — a copy-on-write
@@ -230,10 +204,11 @@ def test_stream_cdf_tails_dml_as_changes(registered, tmp_path):
 def test_partition_meta_raises_on_headless_unspecced_log(registered, tmp_path):
     """Review finding: when commit 0 is gone and the oldest retained
     commit carries no partition spec (head truncated outside
-    cleanup_log's checkpoint invariant), _partition_meta used to fall
-    back to pby=[] — silently reading a PARTITIONED table as
-    unpartitioned (partition columns all null). It must raise like the
-    operator twin TxLogTable.partition_meta does."""
+    cleanup_log's checkpoint invariant), the DataSource's partition read
+    used to fall back to pby=[] — silently reading a PARTITIONED table
+    as unpartitioned (partition columns all null). logfold.partition_meta,
+    which the DataSource and TxLogTable.partition_meta share, must
+    raise."""
     path = str(tmp_path / "t")
     t = TxLogTable.create(
         registered,
@@ -251,14 +226,14 @@ def test_partition_meta_raises_on_headless_unspecced_log(registered, tmp_path):
     # metadata-complete checkpoint
     os.remove(os.path.join(t.log_dir, f"{0:012d}.json"))
     with pytest.raises(FileNotFoundError, match="partition spec"):
-        txlog_source._partition_meta(t.log_dir)
+        logfold.partition_meta(t.log_dir)
 
 
 def test_datasource_dv_pathkey_survives_checkpoint_sidecar(
     registered, tmp_path
 ):
-    """The inlined _ckpt_state twin must carry dv_pathkey through a
-    parquet checkpoint sidecar: a PARTITIONED table's rel-keyed vector
+    """The DataSource must carry dv_pathkey through a parquet
+    checkpoint sidecar: a PARTITIONED table's rel-keyed vector
     (basename != relative path) read via the DataSource after a
     cleanup_log bootstrap would silently mis-key otherwise."""
     spark = registered

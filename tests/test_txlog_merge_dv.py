@@ -413,3 +413,40 @@ def test_dv_merge_duplicate_source_keys_exact_positions(spark, tmp_path):
     assert sum(d["cardinality"] for d in t2.dvs().values()) == 1
     rows = sorted((r.k, r.amt) for r in t2.read().collect())
     assert rows == [(0, 1.0), (0, 2.0), (0, 3.0), (1, 1.0), (2, 2.0)]
+
+
+@pytest.mark.parametrize(
+    "name", ["part 0.parquet", "p%41.parquet"], ids=["space", "percent"]
+)
+def test_dv_merge_uri_unsafe_basename_on_adopted_layout(spark, tmp_path, name):
+    """An adopted layout whose data-file basename the file URI
+    percent-encodes (a space, a '%'): the DV merge must delete exactly
+    the matched rows, in that file as in a plain-named one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "t"
+    d.mkdir()
+    for fname, ks in ((name, range(10)), ("other.parquet", range(10, 20))):
+        pq.write_table(
+            pa.table(
+                {
+                    "k": pa.array(list(ks), pa.int32()),
+                    "amt": [float(k) for k in ks],
+                }
+            ),
+            str(d / fname),
+        )
+    t = TxLogTable.convert(spark, str(d))
+    src = spark.createDataFrame([(1,), (2,), (15,)], "k int")
+    merge_into_txlog(
+        spark, t, src, ["k"],
+        clauses={"matched": [{"action": "delete"}]}, mode="dv",
+    )
+    assert sorted(r.k for r in t.read().collect()) == [
+        k for k in range(20) if k not in (1, 2, 15)
+    ]
+    assert {f: d["cardinality"] for f, d in t.dvs().items()} == {
+        name: 2,
+        "other.parquet": 1,
+    }

@@ -78,13 +78,13 @@ def test_time_travel_reads_narrow_schema(spark, tmp_path):
     t = _mk(spark, tmp_path)
     v_narrow = t.version()
     t.alter_column_type("k", "bigint")
-    from airbnb_listings_data_pipelines_spark.operators.txlog import (
-        schema_json_at,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        schema_and_mapping_at,
     )
     from pyspark.sql.types import StructType
 
     old = StructType.fromJson(
-        json.loads(schema_json_at(t.log_dir, v_narrow))
+        json.loads(schema_and_mapping_at(t.log_dir, v_narrow)[0])
     )
     assert old["k"].dataType.typeName() == "integer"
     now = StructType.fromJson(json.loads(t._schema_at()))
